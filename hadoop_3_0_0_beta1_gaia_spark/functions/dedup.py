@@ -1804,17 +1804,15 @@ def simhash64_hamming_pairs(
     text_col: str = "text",
     max_bucket_size: int | None = None,
     eager: bool = True,
-    use_kernel: bool = True,
 ) -> DataFrame:
     """Hamming-radius pair search over the 63-bit fingerprint — the scale
     twin of :func:`simhash_hamming_pairs` (same streaming equi-self-join on
     (band, band value), same carried-fingerprint bit_count verify; see that
     docstring for why candidates must NOT use in-row bucket expansion).
 
-    ``use_kernel`` selects the Arrow fingerprint kernel
-    (:func:`simhash64_kernel`, bit-identical to the expression fold, ~6x at
-    the sf10 fixture); ``False`` keeps the pure-expression fold for the
-    pin tests and expression-only environments.
+    Fingerprints come from the Arrow kernel (:func:`simhash64_kernel`,
+    bit-identical to the :func:`simhash64` expression fold, ~6x at the sf10
+    fixture).
 
     Bands are exact integer bit-slices (shiftright + mask on BIGINT — no
     double arithmetic: bits above 52 would lose exactness in the
@@ -1826,8 +1824,7 @@ def simhash64_hamming_pairs(
     """
     if not 1 <= radius <= 7:
         raise ValueError("radius must be in 1..7 for a 63-bit fingerprint")
-    fp_builder = simhash64_kernel if use_kernel else simhash64
-    sims = fp_builder(df, id_col=id_col, text_col=text_col)
+    sims = simhash64_kernel(df, id_col=id_col, text_col=text_col)
     return hamming63_pairs(
         sims,
         radius=radius,

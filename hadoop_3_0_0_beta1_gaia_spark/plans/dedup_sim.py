@@ -28,6 +28,7 @@ from ..functions.dedup import (
 )
 from ..functions.similarity import (
     cosine_near_dup,
+    cosine_near_dup_blocked,
     cosine_near_dup_lsh,
     cosine_topk,
     cosine_topk_vectorized,
@@ -393,14 +394,14 @@ def dedup_cluster_canonical_capped(spark, sf_dir):
     "dedup_embedding_cosine",
     oracle=duckdb_cosine_near_dup("embeddings", **_NEARDUP),
     ref="embedding-cosine near-dup pairs — exact O(n²) baseline, fully distributed: "
-    "block-partitioned pair tiles + Arrow kernel with the bit-identical per-dim fold "
-    "(no driver collect, no per-pair interpreted expressions — 30x over the "
-    "expression cross join at sf0.1; cosine_near_dup stays the expression anchor, "
-    "equality asserted in tests; LSH/IVF entries are the 100 TB scale path)",
+    "cosine_near_dup_blocked runs the LSH tile kernel over one bucket — "
+    "block-partitioned pair tiles + Arrow kernel with the shared bit-identical "
+    "per-dim fold (no driver collect, no per-pair interpreted expressions — 30x "
+    "over the expression cross join at sf0.1; cosine_near_dup stays the "
+    "expression anchor, equality asserted in tests; LSH/IVF entries are the "
+    "100 TB scale path)",
 )
 def dedup_embedding_cosine(spark, sf_dir):
-    from ..functions.similarity import cosine_near_dup_blocked
-
     return cosine_near_dup_blocked(T(spark, sf_dir, "embeddings"), **_NEARDUP)
 
 
@@ -1050,10 +1051,7 @@ def dedup_containment_capped(spark, sf_dir):
 
 @register(
     "knn_filtered_topk",
-    oracle=__import__(
-        "hadoop_3_0_0_beta1_gaia_spark.functions.similarity",
-        fromlist=["duckdb_cosine_topk_filtered"],
-    ).duckdb_cosine_topk_filtered(
+    oracle=duckdb_cosine_topk(
         "embeddings", k=5, query_where="vec_id < 50", neighbor_where="label = 1"
     ),
     ref="filtered vector search (the RAG query): cosine top-k where neighbors "
@@ -1063,9 +1061,7 @@ def dedup_containment_capped(spark, sf_dir):
     "a plain top-k needs k/selectivity candidates and can still under-fill",
 )
 def knn_filtered_topk(spark, sf_dir):
-    from ..functions.similarity import cosine_topk_filtered
-
-    return cosine_topk_filtered(
+    return cosine_topk(
         T(spark, sf_dir, "embeddings"),
         k=5,
         query_filter=F.col("vec_id") < 50,

@@ -1390,28 +1390,6 @@ def _bitext_pairs_expr(spark, sf_dir):
     )
 
 
-def _bt_fold_dots(V, Q):
-    """|V|x|Q| dot-product matrix with the expression fold's exact IEEE op
-    sequence: one accumulation per dimension, in dimension order (matches
-    DuckDB's list_dot_product and the F.aggregate left fold bit-for-bit)."""
-    import numpy as np
-
-    acc = np.zeros((V.shape[0], Q.shape[0]), dtype=np.float64)
-    for dim in range(V.shape[1]):
-        acc += np.outer(V[:, dim], Q[:, dim])
-    return acc
-
-
-def _bt_fold_norms(V):
-    """Per-row squared norms via the same per-dimension left fold."""
-    import numpy as np
-
-    acc = np.zeros(V.shape[0], dtype=np.float64)
-    for dim in range(V.shape[1]):
-        acc += V[:, dim] * V[:, dim]
-    return acc
-
-
 def bitext_pairs_vectorized(spark, sf_dir):
     """(a_id, b_id, cos_e6) for every cross-side pair — the µ-unit-frozen
     cosine computed by a numpy mapInPandas kernel with the EXACT IEEE op
@@ -1423,7 +1401,7 @@ def bitext_pairs_vectorized(spark, sf_dir):
     import pandas as pd
     from pyspark.sql.types import LongType, StructField, StructType
 
-    from ..functions.similarity import as_double
+    from ..functions.similarity import as_double, fold_dots, fold_norms
 
     emb = T(spark, sf_dir, "embeddings")
     a_rows = (
@@ -1432,10 +1410,8 @@ def bitext_pairs_vectorized(spark, sf_dir):
         .collect()
     )
     a_ids = np.array([r["vec_id"] for r in a_rows], dtype=np.int64)
-    A = np.array([r["v"] for r in a_rows], dtype=np.float64)
-    _fold_dots, _fold_norms = _bt_fold_dots, _bt_fold_norms
-
-    an = _fold_norms(A)
+    At = np.ascontiguousarray(np.array([r["v"] for r in a_rows], dtype=np.float64).T)
+    an = fold_norms(At)
     schema = StructType(
         [
             StructField("a_id", LongType(), False),
@@ -1448,10 +1424,10 @@ def bitext_pairs_vectorized(spark, sf_dir):
         for pdf in batches:
             if not len(pdf):
                 continue
-            V = np.array(list(pdf["v"]), dtype=np.float64)
+            Vt = np.ascontiguousarray(np.array(list(pdf["v"]), dtype=np.float64).T)
             b_ids = pdf["b_id"].to_numpy(dtype=np.int64)
-            nn = _fold_norms(V)
-            cos = _fold_dots(V, A) / np.sqrt(np.outer(nn, an))  # |B|x|A|
+            # |B|x|A|
+            cos = fold_dots(Vt, At) / np.sqrt(np.outer(fold_norms(Vt), an))
             c6 = np.floor(cos * 1_000_000 + 0.5).astype(np.int64)
             na, nb = len(a_ids), len(b_ids)
             yield pd.DataFrame(
@@ -1562,8 +1538,9 @@ def _bitext_capped_oracle() -> str:
     "sides shuffle ONCE keyed by bucket (corpus-sized, never pair-sized) "
     "and each bucket's |A_b| x |B_b| cosine block is one vectorized matrix "
     "product with the expression fold's exact IEEE op sequence "
-    "(_bt_fold_dots — bit-equal to DuckDB's list_dot_product, pinned by "
-    "the uncapped kernel's equality test), frozen to µ-unit BIGINTs "
+    "(functions.similarity.fold_dots — bit-equal to DuckDB's "
+    "list_dot_product, pinned by the uncapped kernel's equality test), "
+    "frozen to µ-unit BIGINTs "
     "before the margin windows",
 )
 def bitext_margin_mining_capped(spark, sf_dir):
@@ -1577,7 +1554,7 @@ def bitext_pairs_ivf_capped(spark, sf_dir):
     import numpy as np
     import pandas as pd
 
-    from ..functions.similarity import as_double, ivf_probes
+    from ..functions.similarity import as_double, fold_dots, fold_norms, ivf_probes
 
     emb = T(spark, sf_dir, "embeddings").filter(
         F.col("label").isin(_BT_A, _BT_B)
@@ -1622,11 +1599,11 @@ def bitext_pairs_ivf_capped(spark, sf_dir):
             )
         a_ids = adf["a_id"].to_numpy(dtype=np.int64)
         b_ids = bdf["b_id"].to_numpy(dtype=np.int64)
-        A = np.array(list(adf["v"]), dtype=np.float64)
-        B = np.array(list(bdf["bv"]), dtype=np.float64)
-        an = _bt_fold_norms(A)
-        bn = _bt_fold_norms(B)
-        cos = _bt_fold_dots(B, A) / np.sqrt(np.outer(bn, an))  # |B|x|A|
+        At = np.ascontiguousarray(np.array(list(adf["v"]), dtype=np.float64).T)
+        Bt = np.ascontiguousarray(np.array(list(bdf["bv"]), dtype=np.float64).T)
+        cos = fold_dots(Bt, At) / np.sqrt(
+            np.outer(fold_norms(Bt), fold_norms(At))
+        )  # |B|x|A|
         c6 = np.floor(cos * 1_000_000 + 0.5).astype(np.int64)
         na, nb = len(a_ids), len(b_ids)
         return pd.DataFrame(

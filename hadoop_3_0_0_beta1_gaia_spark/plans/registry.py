@@ -41,50 +41,7 @@ def register(name: str, oracle: str | None = None, ref: str = ""):
     return deco
 
 
-# The driver's CORRECTNESS check covers the FIRST 50 registry entries, so
-# the window below is curated each round. Full rotation history (#1-#11:
-# burn-down of never-driver-validated entries through r7, recency rotations
-# since) lives in NOTES.md ("Registry rotation history"); only the CURRENT
-# window's rationale is kept here.
-#
-# Rotation #13 (round 11) — the r4 burn-down (VERDICT r10 item 3). After
-# CORRECTNESS_r10 the oldest driver greens are the r4 cohort (47 entries,
-# incl. the three dropped by rotation #12 to hold the window at 50:
-# dedup_containment / dedup_incremental_exact / decontaminate_eval_overlap).
-# The window takes the 34 alphabetically-first r4 entries PLUS
-# video_frames_sample (out of alphabetical order: its decode path changed
-# this round via jpeg_decode_batch — changed-plan re-validation outranks
-# the recency tie). The 12 r4 leftovers — stream_sliding_topk,
-# supplier_cnt_notin, top_supplier_per_part, url_normalize_dedup,
-# user_hour_bitmap, validate_orders_constraints, zorder_layout_orders,
-# plus stream_late_data_drop, stream_interval_join, session_path_topk,
-# scd2_order_history and promo_revenue_monthly (which handed their slots
-# to this round's first contacts and the set_except re-validation) — lead
-# rotation #14 with the r5 cohort (17).
-# IN for first contact (outranks the recency tie, rotation-#12 precedent):
-# bitext_margin_mining_capped (IVF-pruned bitext twin), dp_count_release
-# (geometric-mechanism DP count release), jl_projection_recall
-# (Johnson-Lindenstrauss projection recall gate), decontaminate_near_dup
-# (broadcast cross-side LSH decontamination), trending_decay_topk
-# (exact-integer decayed trending).
-# IN for changed-semantics/plan re-validation: k_anonymity_release (the
-# remainder row is now withheld unless >= 2 suppressed cells merge to
-# >= k docs — ADVICE r10), prf_rm3_search (pass 2 restructured to the
-# candidate-term broadcast pre-filter + shared token arrays),
-# hybrid_rrf_search (BM25 side reads the shared persisted token-array
-# frame; bm25_search_topk itself is in the r4 pick), and set_except
-# (REJOINS the window: the subtracted side is now status-filtered so the
-# gate output is 49 rows instead of the 0-row weakest-evidence form that
-# kept it out since rotation #10).
-# Kept: the 2 standing anchors and one representative per 100 TB capped
-# config. OUT: the r10-green cohort (every family keeps in-window or
-# repo-gate coverage; the repo oracle gate runs all 257 every session —
-# dedup_video_fingerprint (+capped) re-validated via tools/driver_check.py
-# after the decode-path change, digests pinned vs r10 artifacts). Every IN
-# entry pre-validated under the exact driver protocol (tools/
-# driver_check.py, sf0.01) after EACH of the six window edits. After
-# CORRECTNESS_r11, max driver-row age <= 4 rounds for everything except
-# the 12 r4 leftovers (age 7, first up next round).
+# The driver's CORRECTNESS check covers the first 50 entries; history in NOTES.md.
 _WINDOW: list[str] = [
     # anchors (driver-green r1-r10)
     "q1_pricing_summary",

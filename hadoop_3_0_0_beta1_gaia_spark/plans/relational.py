@@ -10,6 +10,7 @@ idiom, now Catalyst's decision.
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.aggregate import duckdb_value_histogram, value_aggregate, value_histogram
@@ -1740,6 +1741,17 @@ def copurchase_triangles(spark, sf_dir):
     return tris.crossJoin(F.broadcast(n_edges)).crossJoin(F.broadcast(n_nodes))
 
 
+# Graph entries broadcast a VERTEX-sized frame (degrees, ranks, BFS frontier)
+# against the edge stream while its row count stays <= this bound (≈256 MB
+# built); above it the join falls back to SortMergeJoin — the honest 100 TB
+# path, where a part table outgrows any broadcast.
+_BROADCAST_MAX_ROWS = 16_000_000
+
+
+def _broadcast_if_small(f: DataFrame, n_rows: int) -> DataFrame:
+    return F.broadcast(f) if n_rows <= _BROADCAST_MAX_ROWS else f
+
+
 # DOULION edge-sampling probability 1/_TRI_PINV (Tsourakakis et al., KDD'09):
 # keep an edge iff its 60-bit md5 fraction < 2^60/_TRI_PINV — deterministic on
 # both engines, so the oracle reproduces the SAMPLE, not just the estimator.
@@ -1815,9 +1827,8 @@ def copurchase_triangles_sampled(spark, sf_dir):
     # is the sampled edge list — joining the degrees back as SortMergeJoins
     # shuffled se twice; broadcast both degree sides so the orientation pass
     # stays map-side over the cache. deg is persisted (it feeds BOTH join
-    # sides) and its populate count gates the broadcast exactly as in
-    # copurchase_pagerank (≤16M vertices ≈ 256 MB built; above → SMJ, the
-    # honest 100 TB fallback).
+    # sides) and its populate count gates the broadcast
+    # (_broadcast_if_small, as in copurchase_pagerank).
     deg = owned_persist(
         se.select(F.col("a").alias("v"))
         .unionByName(se.select(F.col("b").alias("v")))
@@ -1825,9 +1836,12 @@ def copurchase_triangles_sampled(spark, sf_dir):
         .agg(F.count("*").alias("d"))
     )
     n_v = deg.count()
-    bc = (lambda f: F.broadcast(f)) if n_v <= 16_000_000 else (lambda f: f)
-    da = bc(deg.select(F.col("v").alias("a"), F.col("d").alias("d_a")))
-    db = bc(deg.select(F.col("v").alias("b"), F.col("d").alias("d_b")))
+    da = _broadcast_if_small(
+        deg.select(F.col("v").alias("a"), F.col("d").alias("d_a")), n_v
+    )
+    db = _broadcast_if_small(
+        deg.select(F.col("v").alias("b"), F.col("d").alias("d_b")), n_v
+    )
     a_first = (F.col("d_a") < F.col("d_b")) | (
         (F.col("d_a") == F.col("d_b")) & (F.col("a") < F.col("b"))
     )
@@ -1943,10 +1957,10 @@ def copurchase_pagerank(spark, sf_dir):
     # the 240M-row sf10 edge list crossed a shuffle four times for the two
     # iterations). Now deg⋈r pre-joins vertex-to-vertex into one per-vertex
     # contribution frame (r DIV d), and the edge stream joins ONCE per
-    # iteration — broadcast when the vertex count allows it (≤ 16M vertices
-    # ≈ 256 MB built), so the edge list is never shuffled by src at all;
-    # above the cap the planner falls back to SMJ (a 100 TB part table
-    # outgrows any broadcast) and still pays half the r11 join work.
+    # iteration — broadcast when the vertex count allows it
+    # (_broadcast_if_small), so the edge list is never shuffled by src at
+    # all; above the cap the planner falls back to SMJ and still pays half
+    # the r11 join work.
     #
     # und and deg are persisted UNCONDITIONALLY. History: r7/r11 measured
     # persists as sf1 LOSSES (7.6 -> 11.6 s) because the old single-action
@@ -1971,7 +1985,6 @@ def copurchase_pagerank(spark, sf_dir):
         )
     )
     n_v = deg.count()
-    bcast = (lambda f: F.broadcast(f)) if n_v <= 16_000_000 else (lambda f: f)
     r = deg.select("v", F.lit(_PR_SCALE).cast("long").alias("r"))
     base = F.floor(F.lit(0.15 * _PR_SCALE)).cast("long")
     for _ in range(_PR_ITERS):
@@ -1980,7 +1993,7 @@ def copurchase_pagerank(spark, sf_dir):
             .select("v", F.expr("r DIV d").alias("c"))
         )
         contrib = (
-            edges.join(bcast(per_v), edges.src == per_v.v)
+            edges.join(_broadcast_if_small(per_v, n_v), edges.src == per_v.v)
             .select("dst", "c")
             .groupBy("dst")
             .agg(F.sum("c").alias("s"))
@@ -2090,15 +2103,15 @@ def copurchase_bfs_depth(spark, sf_dir):
     # checkpointed small sides keeps the edge cache map-side for all
     # _BFS_DEPTH rounds. Gated per round on the actual frontier/visited row
     # count (free: the frames are checkpointed) — a graph whose reachable
-    # set outgrows ~16M vertices (≈256 MB built) falls back to SMJ.
+    # set outgrows _BROADCAST_MAX_ROWS falls back to SMJ.
     n_visited = 1
-    bc = lambda f, n: F.broadcast(f) if n <= 16_000_000 else f
     for d in range(1, _BFS_DEPTH + 1):
         nxt = (
-            bc(frontier, n_visited).join(edges, frontier.v == edges.src)
+            _broadcast_if_small(frontier, n_visited)
+            .join(edges, frontier.v == edges.src)
             .select(F.col("dst").alias("v"))
             .distinct()
-            .join(bc(visited, n_visited), "v", "left_anti")
+            .join(_broadcast_if_small(visited, n_visited), "v", "left_anti")
             .select("v", F.lit(d).cast("long").alias("depth"))
             .localCheckpoint(eager=True)
         )

@@ -407,33 +407,6 @@ def test_binary_partition_colocates_key_slices(spark):
 # ----------------------------------------------------------------- similarity
 
 
-def test_cosine_topk_numpy_matches_exact(spark, sf_dir):
-    """The BLAS fast path must agree with the oracle-checked expression fold
-    (identical neighbor sets; cosines equal to 1e-9)."""
-    from pyspark.sql import functions as F
-
-    from hadoop_3_0_0_beta1_gaia_spark.functions.similarity import (
-        cosine_topk,
-        cosine_topk_numpy,
-    )
-    from hadoop_3_0_0_beta1_gaia_spark.session import table as T
-
-    emb = T(spark, sf_dir, "embeddings")
-    exact = {
-        (r["q_id"], r["rank"]): (r["n_id"], r["cos"])
-        for r in cosine_topk(emb, k=5, query_filter=F.col("vec_id") < 20).collect()
-    }
-    fast = {
-        (r["q_id"], r["rank"]): (r["n_id"], r["cos"])
-        for r in cosine_topk_numpy(emb, k=5, query_filter=F.col("vec_id") < 20).collect()
-    }
-    assert set(exact) == set(fast)
-    for key, (n_id, cos) in exact.items():
-        fn_id, fcos = fast[key]
-        assert fn_id == n_id
-        assert abs(fcos - cos) < 1e-6  # exact path rounds to 6 digits
-
-
 def test_lsh_near_dup_subset_of_bruteforce(spark, sf_dir):
     """Bucketed LSH near-dup returns a subset of the exact O(n²) pairs (same
     cosine values; recall < 1 from cross-bucket misses)."""
@@ -549,7 +522,7 @@ def test_ivf_filtered_full_probe_equals_filtered_brute_force(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from hadoop_3_0_0_beta1_gaia_spark.functions.similarity import (
-        cosine_topk_filtered,
+        cosine_topk,
         ivf_topk,
     )
     from hadoop_3_0_0_beta1_gaia_spark.session import table as T
@@ -565,7 +538,7 @@ def test_ivf_filtered_full_probe_equals_filtered_brute_force(spark, sf_dir):
     }
     brute = {
         (r["q_id"], r["rank"]): (r["n_id"], r["cos"])
-        for r in cosine_topk_filtered(
+        for r in cosine_topk(
             emb, k=5,
             query_filter=F.col("vec_id") < 20,
             neighbor_filter=F.col("label") == 1,
@@ -675,39 +648,39 @@ def test_salted_join_drops_null_keys_like_plain_join(spark):
     assert out == [(1, "x"), (3, "y")]
 
 
-def test_cosine_near_dup_vectorized_bit_identical(spark, sf_dir):
-    from hadoop_3_0_0_beta1_gaia_spark.functions.similarity import (
-        cosine_near_dup,
-        cosine_near_dup_vectorized,
-    )
-    from hadoop_3_0_0_beta1_gaia_spark.session import table as T
-
-    df = T(spark, sf_dir, "embeddings")
-    a = sorted(map(tuple, cosine_near_dup(df, threshold=0.3).collect()))
-    b = sorted(map(tuple, cosine_near_dup_vectorized(df, threshold=0.3).collect()))
-    assert a == b and len(a) > 0
-
-
 def test_cosine_near_dup_blocked_bit_identical(spark, sf_dir):
     """The distributed block-tile kernel (the registered entry's path) must
     equal the expression fold exactly — same per-dimension IEEE op order —
-    including across an uneven block count that forces cross-block pairs."""
+    including across an uneven block count that forces cross-block pairs.
+    Edge frames: an all-zero vector (its pairs have cos=0 on both paths —
+    the 1e-300 norm floor, never NaN) and a single vector (no pairs)."""
     from hadoop_3_0_0_beta1_gaia_spark.functions.similarity import (
         cosine_near_dup,
         cosine_near_dup_blocked,
     )
     from hadoop_3_0_0_beta1_gaia_spark.session import table as T
 
+    def pairs(fn, df, **kw):
+        return sorted(map(tuple, fn(df, threshold=0.3, **kw).collect()))
+
     df = T(spark, sf_dir, "embeddings")
-    a = sorted(map(tuple, cosine_near_dup(df, threshold=0.3).collect()))
+    a = pairs(cosine_near_dup, df)
     for k in (1, 7):
-        b = sorted(
-            map(
-                tuple,
-                cosine_near_dup_blocked(df, threshold=0.3, num_blocks=k).collect(),
-            )
-        )
-        assert a == b and len(a) > 0
+        assert a == pairs(cosine_near_dup_blocked, df, num_blocks=k) and len(a) > 0
+
+    small = "vec_id BIGINT, embedding ARRAY<FLOAT>"
+    zero = spark.createDataFrame(
+        [(1, [0.0, 0.0, 0.0]), (2, [1.0, 2.0, 3.0]), (3, [1.0, 2.0, 2.5]),
+         (4, [0.0, 0.0, 0.0])],
+        small,
+    )
+    one = spark.createDataFrame([(1, [1.0, 2.0, 3.0])], small)
+    z = pairs(cosine_near_dup, zero)
+    assert [(x, y) for x, y, _ in z] == [(2, 3)]  # zero-norm pairs excluded
+    for k in (1, 3):
+        assert pairs(cosine_near_dup_blocked, zero, num_blocks=k) == z
+        assert pairs(cosine_near_dup_blocked, one, num_blocks=k) == []
+    assert pairs(cosine_near_dup, one) == []
 
 
 def test_winnow_kernel_bit_identical(spark, sf_dir):
